@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** User-facing entry points mirroring the reference's two programs, so a
   * reference user can run the same jobs against this engine:
@@ -13,6 +14,12 @@ import org.apache.spark.sql.SparkSession
   *       query at any of the 24 parameterizations, written as parquet.
   *
   * `csvDir` holds the three clinical CSVs by their published names.
+  *
+  * Each command prints how many rows it wrote. The count comes from the
+  * pass that writes the output, never from reading it back: the mapping
+  * counts the rows it collected for the JSON document, and `load-truths`
+  * counts its label groups with an [[Observation]] on the parquet write.
+  * So every Spark job a command starts produces output.
   */
 object Ea1141Main {
   def main(args: Array[String]): Unit = {
@@ -44,15 +51,19 @@ object Ea1141Main {
         ClinicalCsv.read(spark, s"$csvDir/ea1141_year0_tomolesions_outcome.csv"),
         ClinicalCsv.read(spark, s"$csvDir/ea1141_year0_mrilesions_outcome.csv"),
         imageRoot = rebaseRoot)
-      Ea1141Json.writeMappingJson(mapping, outJson)
-      println(s"[ea1141] wrote ${Ea1141Json.readMappingJson(spark, outJson).count()} records to $outJson")
+      val records = Ea1141Json.writeMappingJson(mapping, outJson)
+      println(s"[ea1141] wrote $records records to $outJson")
 
     case "load-truths" :: mappingJson :: gtType :: scope :: dbtOnly :: mriExcluded :: outDir :: Nil =>
       val mapping = Ea1141Json.readMappingJson(spark, mappingJson)
       val truths = Ea1141Pipeline.groundTruths(mapping, gtType, scope,
         dbtOnly.toBoolean, mriExcluded.toBoolean)
-      truths.write.mode("overwrite").parquet(outDir)
-      println(s"[ea1141] wrote ${spark.read.parquet(outDir).count()} label groups to $outDir")
+      // A uniquely named Observation per call: calls may run concurrently
+      // on one session, and each must read its own write's metrics.
+      val written = Observation()
+      truths.observe(written, count(lit(1)).as("groups"))
+        .write.mode("overwrite").parquet(outDir)
+      println(s"[ea1141] wrote ${written.get("groups")} label groups to $outDir")
 
     case other =>
       throw new IllegalArgumentException(

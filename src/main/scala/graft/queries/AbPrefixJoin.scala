@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -22,7 +24,8 @@ object AbPrefixJoin {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try graft.Tables.documentsSpread(spark, dir) catch { case _: Throwable => () }
+    try graft.Tables.documentsSpread(spark, dir)
+    catch { case NonFatal(e) => System.err.println(s"[ab] documentsSpread failed: $e") }
 
     def time(name: String)(mk: => DataFrame): Unit = {
       val ts = (1 to reps).map { _ =>

@@ -102,12 +102,22 @@ object DicomLike {
   }
 
   private val metaUdf = udf((bytes: Array[Byte]) =>
-    if (bytes == null) None else parseMeta(bytes))
+    if (bytes == null) None else parseMeta(bytes)).withName("dicom_meta")
 
   /** Decorate a binaryFile scan (path, content, ...) with the extracted
-    * metadata struct; undecodable files keep a NULL struct. */
+    * metadata struct; undecodable files keep a NULL struct.
+    *
+    * The decode is the generator of a one-row explode, not a projected
+    * column. Catalyst substitutes a projected column's expression into
+    * every predicate it pushes below the projection (`meta IS NOT NULL`,
+    * each filter on a `meta` field, the join's inferred not-null
+    * filters), so a plain `withColumn` ran the decode about seven times
+    * per file. A predicate on a generator's output stays above the
+    * generator, so each file is decoded once. `array` of one element
+    * always yields exactly one row, so an undecodable file still yields
+    * its NULL-`meta` row. */
   def withMeta(scanned: DataFrame, contentCol: String = "content"): DataFrame =
-    scanned.withColumn("meta", metaUdf(col(contentCol)))
+    scanned.select(col("*"), explode_outer(array(metaUdf(col(contentCol)))).as("meta"))
 
   /** Flattened volume-metadata view feeding
     * [[graft.pipeline.Ea1141Pipeline.buildMapping]]. */

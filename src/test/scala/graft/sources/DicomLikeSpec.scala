@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 import graft.pipeline.{Ea1141Pipeline, VolumeScan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 
 /** S1/S3/S4/S7 end-to-end: a synthesized
@@ -139,6 +141,35 @@ class DicomLikeSpec extends SparkTestBase {
         .map(r => r.getString(0) -> r.getInt(1)).toMap
       assert(rows === Map("s1" -> 4, "s2" -> 4))
     } finally q.stop()
+  }
+
+  /** Decode-UDF calls in the optimized plan, subqueries included. */
+  private def decodes(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collectWithSubqueries { case p =>
+      p.expressions.map(_.collect {
+        case u: ScalaUDF if u.udfName.contains("dicom_meta") => u
+      }.size).sum
+    }.sum
+
+  test("plan shape: each file is decoded once, whatever filters sit above") {
+    val root = Files.createTempDirectory("dicom_plan")
+    writeVolume(root, "EA1141-6001", "19400101", "p1",
+      Map("FrameLaterality" -> "R"), shape = Seq(4, 4, 4))
+    val scanned = VolumeScan.scan(spark, root.toString)
+    val screening = Seq(("6001", "4", "2", 0L))
+      .toDF("SUBJECT_DE", "TOMO_BIRADS_YR0", "MRI_BIRADS_YR0", "row_id")
+    val tomo = Seq(("6001", "1", "Invasive", 0L))
+      .toDF("SUBJECT_DE", "TOMO_LESIONBREAST_YR0", "TOMO_LESIONOUTCOME_YR0", "row_id")
+    val mri = Seq(("6001", "2", "Benign", 0L))
+      .toDF("SUBJECT_DE", "MRI_LESIONBREAST_YR0", "MRI_LESIONOUTCOME_YR0", "row_id")
+    val mapping = Ea1141Pipeline.buildMapping(DicomLike.volumes(scanned), screening,
+      tomo, mri, imageRoot = s"file:$root/")
+    assert(decodes(mapping) === 1, mapping.queryExecution.optimizedPlan)
+    assert(mapping.count() === 1)
+    Seq(DicomLike.withFrames(scanned).filter(col("meta").isNotNull && size(col("frames")) > 0),
+      DicomLike.sampleFrames(scanned, k = 2),
+      DicomLike.extractFeatures(scanned, dim = 4)
+    ).foreach(df => assert(decodes(df) === 1, df.queryExecution.optimizedPlan))
   }
 
   test("end-to-end: tree scan -> extraction -> mapping with truth labels") {
